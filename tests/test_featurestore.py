@@ -256,7 +256,9 @@ def test_featurestore_forwards_salting_to_fused_path(spark, events, feats, feats
 
 
 def test_fused_multi_table_collision_raises(spark, events, feats):
-    from torchestra_spark.operators.temporal import asof_join_multi
+    """Both entry points share one spec normalisation: a repeated output
+    column raises, and ``value_cols=[]`` means no value columns."""
+    from torchestra_spark.operators.temporal import asof_join, asof_join_multi
 
     with pytest.raises(ValueError, match="collides"):
         asof_join_multi(
@@ -268,6 +270,22 @@ def test_fused_multi_table_collision_raises(spark, events, feats):
             on="user_id",
             left_ts="ts",
         )
+    # a chained asof_join would emit a second matched_feature_ts
+    once = asof_join(events, feats, on="user_id", left_ts="ts", value_cols=["fval"])
+    with pytest.raises(ValueError, match="collides"):
+        asof_join(once, feats, on="user_id", left_ts="ts", value_cols=[])
+    # ...unless the first call dropped it
+    once = asof_join(events, feats, on="user_id", left_ts="ts", value_cols=[],
+                     keep_right_ts=False)
+    assert once.columns == events.columns
+
+    multi = asof_join_multi(
+        events, [dict(name="f", df=feats, ts="feature_ts", value_cols=[])],
+        on="user_id", left_ts="ts",
+    )
+    assert multi.columns == events.columns + ["f_matched_ts"]
+    single = asof_join(events, feats, on="user_id", left_ts="ts", value_cols=[])
+    assert single.columns == events.columns + ["matched_feature_ts"]
 
 
 def test_fused_multi_table_random_vs_pandas_oracle(spark):

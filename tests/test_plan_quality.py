@@ -103,6 +103,8 @@ def test_asof_auto_small_side_broadcasts_probe_unshuffled(spark, events):
 
 
 def test_asof_auto_disabled_by_env_falls_back_to_union(spark, events, monkeypatch):
+    """With ``_AUTO_BROADCAST_MAX_BYTES`` at 0 the auto gate never
+    broadcasts: a small feature side takes the union plan."""
     from torchestra_spark.io.sources import feature_events
     from torchestra_spark.operators import temporal
     from torchestra_spark.operators.temporal import asof_join

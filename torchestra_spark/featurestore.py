@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from torchestra_spark.checkpoint import CheckpointedWriter
 from torchestra_spark.operators.temporal import (
-    asof_join,
     asof_join_multi,
     fill_forward,
     lag_lead,
@@ -68,7 +67,7 @@ class FeatureStore:
                 df,
                 ts,
                 dict(
-                    value_cols=list(value_cols) if value_cols else None,
+                    value_cols=None if value_cols is None else list(value_cols),
                     strategy=strategy,
                     tolerance_sec=tolerance_sec,
                     salt_buckets=salt_buckets,
@@ -107,52 +106,27 @@ class FeatureStore:
         """Assemble the feature vector: as-of joins -> window features ->
         fitted pipeline transform.  ``fit=False`` reuses loaded state."""
         df = events
-        is_union = [
-            kw.get("strategy", "union") == "union"
-            for _n, _f, _t, kw in self._feature_tables
-        ]
-        fused = [t for t, u in zip(self._feature_tables, is_union) if u]
-        rest = [t for t, u in zip(self._feature_tables, is_union) if not u]
-        # an EXPLICIT strategy='union' on any fused table is a user
-        # declaration that its feature side must not be collected —
-        # honor it by pinning the whole fused pass to union; tables
-        # that left strategy unset ride the library default (auto)
-        fused_strategy = (
-            "union"
-            if any(kw.get("strategy") == "union" for _n, _f, _t, kw in fused)
-            else "auto"
-        )
-        if len(fused) >= 2:
-            # ONE union + ONE entity-partitioned window pass for all
-            # union-strategy tables: k tables would otherwise shuffle
-            # the (wide) probe spine k times
+        # every union table rides ONE asof_join_multi pass (one shuffle
+        # of the probe spine for all of them); any other strategy is a
+        # per-table declaration and gets its own call
+        union = [t for t in self._feature_tables if t[3]["strategy"] == "union"]
+        rest = [[t] for t in self._feature_tables if t[3]["strategy"] != "union"]
+        for group in ([union] if union else []) + rest:
+            kws = [kw for _n, _f, _t, kw in group]
             df = asof_join_multi(
                 df,
-                [
-                    dict(
-                        name=name, df=ft, ts=fts,
-                        value_cols=kw.get("value_cols"),
-                        tolerance_sec=kw.get("tolerance_sec"),
-                    )
-                    for name, ft, fts, kw in fused
-                ],
+                self._specs(group),
                 on=self.entity,
                 left_ts=self.ts,
-                salt_buckets=max(kw.get("salt_buckets", 1) for _n, _f, _t, kw in fused),
+                salt_buckets=max(kw["salt_buckets"] for kw in kws),
                 # most sensitive (lowest) explicit threshold wins — one
-                # shared hot-key pass covers every fused table
+                # shared hot-key pass covers every table of the group
                 salt_threshold=min(
-                    (kw["salt_threshold"] for _n, _f, _t, kw in fused
-                     if kw.get("salt_threshold") is not None),
+                    (kw["salt_threshold"] for kw in kws if kw["salt_threshold"] is not None),
                     default=None,
                 ),
-                strategy=fused_strategy,
+                strategy=kws[0]["strategy"],
             )
-        else:
-            rest = self._feature_tables
-        for name, ft, fts, kw in rest:
-            df = asof_join(df, ft, on=self.entity, left_ts=self.ts, right_ts=fts, **kw)
-            df = df.withColumnRenamed(f"matched_{fts}", f"{name}_matched_ts")
         for col, lags, leads in self._lags:
             df = lag_lead(df, self.entity, self._order, col, lags=lags, leads=leads)
         for col, win, stats in self._rolling:
@@ -179,22 +153,27 @@ class FeatureStore:
         Requirements: ``build(events, fit=True)`` (or ``load_state``)
         must have run first so pipeline state is frozen, and each
         feature table must fit the broadcast budget — the same contract
-        as ``asof_join(strategy='broadcast')``.  Window features (lags,
+        as ``asof_join(strategy='broadcast')``.  All tables match in one
+        Arrow crossing (``asof_join_multi``).  Window features (lags,
         rolling, sessionization) are fit-time history ops; for their
         streaming twins use ``streaming.stream_sessionize_ids`` /
         ``stream_windowed_stats`` explicitly."""
-        out = events_stream
-        for name, ft, fts, kw in self._feature_tables:
-            out = asof_join(
-                out, ft, on=self.entity, left_ts=self.ts, right_ts=fts,
-                value_cols=kw.get("value_cols"),
-                tolerance_sec=kw.get("tolerance_sec"),
-                strategy="broadcast",
-            )
-            out = out.withColumnRenamed(f"matched_{fts}", f"{name}_matched_ts")
+        out = asof_join_multi(
+            events_stream, self._specs(self._feature_tables), on=self.entity,
+            left_ts=self.ts, strategy="broadcast",
+        )
         if self._pipeline is not None:
             out = self._pipeline.transform(out)
         return out
+
+    @staticmethod
+    def _specs(tables) -> List[dict]:
+        """``asof_join_multi`` specs of declared feature tables."""
+        return [
+            dict(name=name, df=ft, ts=fts, value_cols=kw["value_cols"],
+                 tolerance_sec=kw["tolerance_sec"])
+            for name, ft, fts, kw in tables
+        ]
 
     def assert_leakage_free(self, built: DataFrame) -> None:
         """Hard gate: every matched feature timestamp <= event ts."""

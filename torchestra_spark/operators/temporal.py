@@ -8,28 +8,40 @@ explicit skew handling, lag/lead, fill-forward backfill, gap-based
 sessionization — zero temporal leakage (every joined feature_ts <=
 event ts).
 
-Scale design notes
-------------------
-* ``asof_join`` default strategy is **union + window fill-forward**:
-  one shuffle on the entity key, fully JVM-side (whole-stage codegen +
-  a single window scan), no UDF.  At 1000 executors this is a plain
-  hash-partitioned sort — the same cost profile as a sort-merge join.
-* The ``merge_asof`` strategy co-partitions both sides by entity hash
-  and runs ``pandas.merge_asof`` per partition inside ``applyInPandas``
-  — useful when the probe side must keep all its columns wide.
-* Skew: a single hot entity lands in one window partition.  The
-  ``salt_buckets`` option splits each entity's *probe* rows into N
-  hash(ts)-buckets and replicates the (much smaller) feature side into
-  every bucket — preserving point-in-time order within each bucket
-  while spreading the hot entity over N tasks.  AQE's skew-join
-  splitting handles residual imbalance.
-* Window ops (lag/lead/ffill/sessionize) are single-shuffle Catalyst
-  window functions partitioned by entity.
+One as-of engine
+----------------
+``asof_join`` (one feature table) is the k=1 case of ``asof_join_multi``
+(k tables).  Both call ``_asof``, which normalises the table specs,
+checks output-name collisions, drops feature rows whose entity key or ts
+is NULL, runs the ``auto`` gate (``_auto_broadcast_counts``: free
+Catalyst size estimates, then k confirming counts) and dispatches to one
+of three physical paths, all returning the same rows:
+
+* **union spine** (``_asof_spine``): the probe side and all k feature
+  sides unioned on one (entity, ts) spine — ONE entity-hash shuffle and
+  ONE window fill-forward for every table, fully JVM-side, no UDF.  At
+  1000 executors this is a plain hash-partitioned sort (the cost profile
+  of a sort-merge join): the scale-out path for feature sides that do
+  not fit in executor memory.
+* **broadcast kernel** (``_asof_broadcast_multi``): small feature sides
+  ship to every task as sorted arrays; ONE Arrow crossing matches all k
+  tables with vectorized ``searchsorted``.  The probe never shuffles.
+* **cogroup** (``_asof_merge``, k=1 only): both sides co-partitioned by
+  entity, ``pandas.merge_asof`` per entity group.
+
+Skew: a single hot entity lands in one window partition of the union
+spine.  ``salt_buckets`` splits each hot entity's *probe* rows into N
+hash(ts) buckets and replicates its (much smaller) feature history into
+every bucket — preserving point-in-time order within each bucket while
+spreading the hot entity over N tasks.  AQE's skew-join splitting
+handles residual imbalance.
+
+Window ops (lag/lead/ffill/sessionize) are single-shuffle Catalyst
+window functions partitioned by entity.
 """
 
 from __future__ import annotations
 
-import os
 from typing import List, Optional, Sequence
 
 import pandas as pd
@@ -59,65 +71,145 @@ def asof_join(
 ) -> DataFrame:
     """Backward as-of join: for every left row, attach the latest right
     row of the same entity with ``right_ts <= left_ts`` (exact matches
-    allowed — pandas ``merge_asof`` semantics).
+    allowed — pandas ``merge_asof`` semantics), as ``value_cols`` (None
+    = every right column but ``on`` and ``right_ts``) plus
+    ``matched_{right_ts}`` (dropped when ``keep_right_ts=False``).
 
     Leakage-free by construction: joined values only ever come from
-    right rows at or before the probe timestamp.
+    right rows at or before the probe timestamp.  Right rows with a
+    NULL key or NULL ``right_ts`` are ignored; a left row with a NULL
+    key or NULL ``left_ts`` is kept and comes back unmatched.  An
+    output column that already exists on ``left`` raises ValueError.
 
-    Precondition: probe timestamps must be non-null (a NULL event time
-    has no point-in-time meaning); filter them upstream.
+    This is ``asof_join_multi`` with one table; ``strategy`` picks the
+    physical path (every path returns the same rows — pytest property
+    tests and the SQL oracles check each one):
 
-    Strategy (all three produce identical results — pytest equivalence
-    + the same SQL oracle check every path):
-
-    * ``"auto"`` (default): pick ``broadcast`` when the FEATURE side is
+    * ``"auto"`` (default): ``broadcast`` when the feature side is
       provably small — Catalyst size estimate under
-      ``TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES`` (default 64 MB, 0
-      disables) confirmed by an actual row count under the broadcast
-      guardrail — else fall back to ``union``.  The same reasoning as
-      Spark's own ``autoBroadcastJoinThreshold`` for equi-joins:
-      broadcasting the side that fits removes the ONLY shuffle of the
-      (wide, 10^12-row at scale) probe side.  Explicit ``salt_buckets``
-      is a skew declaration for the shuffle path, so it forces union.
-    * ``"union"``: union-tag + window fill-forward — one entity-hash
-      shuffle of both sides, fully JVM-side.  The scale-out path when
-      the feature side does NOT fit in executor memory.
+      ``_AUTO_BROADCAST_MAX_BYTES`` (64 MB) confirmed by an actual row
+      count under the broadcast guardrail — else ``union``.  The same
+      reasoning as Spark's own ``autoBroadcastJoinThreshold`` for
+      equi-joins: broadcasting the side that fits removes the ONLY
+      shuffle of the (wide, 10^12-row at scale) probe side.  Explicit
+      ``salt_buckets`` is a skew declaration for the shuffle path, so it
+      forces union.
+    * ``"union"``: the union spine + window fill-forward — one
+      entity-hash shuffle of both sides, fully JVM-side.
     * ``"broadcast"``: force the broadcast kernel (raises above the
       row guardrail).
     * ``"merge_asof"``: cogrouped ``pandas.merge_asof`` per entity.
 
-    Skew (``salt_buckets > 1``, union strategy): salting is applied only
+    Skew (``salt_buckets > 1``, union spine): salting is applied only
     to **hot entities** — those with ``>= salt_threshold`` probe rows
     (default ``DEFAULT_SALT_THRESHOLD``).  Cold entities keep the plain
     single-bucket path, so the feature side is replicated xN only for
     the handful of keys that need it instead of the whole table.
     """
-    value_cols = list(
-        value_cols
-        if value_cols is not None
-        else [c for c in right.columns if c not in (on, right_ts)]
+    # a dropped matched column takes a private name, so it never
+    # collides with one an earlier call kept
+    matched = f"matched_{right_ts}" if keep_right_ts else "__matched_ts"
+    spec = dict(
+        name="right", df=right, ts=right_ts, value_cols=value_cols,
+        tolerance_sec=tolerance_sec, matched=matched,
     )
+    out = _asof(left, [spec], on, left_ts, strategy, salt_buckets, salt_threshold)
+    return out if keep_right_ts else out.drop(matched)
+
+
+def asof_join_multi(
+    left: DataFrame,
+    tables: Sequence[dict],
+    on: str,
+    left_ts: str = "ts",
+    salt_buckets: int = 1,
+    salt_threshold: Optional[int] = None,
+    strategy: str = "auto",
+) -> DataFrame:
+    """Backward as-of join of K feature tables onto one probe spine.
+
+    ``tables`` is a sequence of specs::
+
+        dict(name="purch", df=purchases, ts="feature_ts",
+             value_cols=None, tolerance_sec=None)
+
+    Per table the semantics are exactly ``asof_join``'s: latest right
+    row with ``right_ts <= left_ts`` (exact ties match), emitted as the
+    table's value columns plus ``{name}_matched_ts``.  Output columns
+    must not collide with each other or with ``left`` (ValueError).
+
+    Every physical path serves all K tables in one pass:
+
+    * ``"union"``: every table's payload rides its own nullable struct
+      column on one shared union spine; the K ``last(struct_k,
+      ignorenulls=True)`` window functions share a single window spec,
+      so Catalyst evaluates them in ONE Window operator over ONE
+      Exchange + sort of the spine — where a loop of ``asof_join`` calls
+      would shuffle the (wide, 10^12-row) probe spine once PER TABLE.
+      Per-table fill-forwards stay independent because rows of table j
+      carry NULL in table k's struct and ``ignorenulls`` skips them.
+      Skew: one shared hot-key pass over the probe side; hot probe rows
+      split into hash(ts) buckets, every table's hot feature rows
+      replicate into all buckets (cold keys pay nothing).
+    * ``"broadcast"``: every table ships to the tasks and ONE Arrow
+      crossing matches all K; the probe spine never shuffles.
+    * ``"auto"`` (default): broadcast when EVERY feature side passes the
+      ``asof_join`` auto gate, else union (always union with explicit
+      ``salt_buckets``).  All K free stats checks run before any count,
+      so one oversized table decides union without a count job.
+    * ``"merge_asof"``: cogrouped ``pandas.merge_asof``, one table only.
+    """
+    specs = [dict(t, matched=f"{t['name']}_matched_ts") for t in tables]
+    return _asof(left, specs, on, left_ts, strategy, salt_buckets, salt_threshold)
+
+
+def _asof(
+    left: DataFrame,
+    tables: Sequence[dict],
+    on: str,
+    left_ts: str,
+    strategy: str,
+    salt_buckets: int,
+    salt_threshold: Optional[int],
+) -> DataFrame:
+    """The as-of engine behind ``asof_join`` and ``asof_join_multi``
+    (see the module docstring).  Each table spec names its output
+    ``matched`` column."""
+    out_names: List[str] = list(left.columns)
+    specs = []
+    for t in tables:
+        right, rts = t["df"], t["ts"]
+        vcols = t.get("value_cols")
+        vcols = [c for c in right.columns if c not in (on, rts)] if vcols is None else list(vcols)
+        for c in vcols + [t["matched"]]:
+            if c in out_names:
+                raise ValueError(
+                    f"as-of join: output column {c!r} of table {t['name']!r} "
+                    "collides with an earlier column; pass value_cols / rename "
+                    "to disambiguate"
+                )
+            out_names.append(c)
+        # a NULL key or ts has no point in time; left in, such a row
+        # fills forward with a NULL matched ts (union), breaks the
+        # broadcast kernel's sorted keys, or makes merge_asof raise
+        clean = right.filter(F.col(on).isNotNull() & F.col(rts).isNotNull())
+        specs.append(dict(t, df=clean, value_cols=vcols))
+    if not specs:
+        return left
     if strategy == "auto":
-        n = _auto_broadcast_rows(right, salt_buckets)
-        if n is not None:
-            return _asof_broadcast(
-                left, right, on, left_ts, right_ts, value_cols, tolerance_sec,
-                keep_right_ts, precounted=n,
-            )
+        counts = _auto_broadcast_counts(specs, salt_buckets)
+        if counts is not None:
+            return _asof_broadcast_multi(left, specs, on, left_ts, counts)
         strategy = "union"
     if strategy == "union":
-        return _asof_union(
-            left, right, on, left_ts, right_ts, value_cols, tolerance_sec,
-            salt_buckets, salt_threshold, keep_right_ts,
-        )
-    if strategy == "merge_asof":
-        return _asof_merge(
-            left, right, on, left_ts, right_ts, value_cols, tolerance_sec, keep_right_ts
-        )
+        return _asof_spine(left, specs, on, left_ts, salt_buckets, salt_threshold)
     if strategy == "broadcast":
-        return _asof_broadcast(
-            left, right, on, left_ts, right_ts, value_cols, tolerance_sec, keep_right_ts
-        )
+        counts = [sp["df"].count() for sp in specs]
+        return _asof_broadcast_multi(left, specs, on, left_ts, counts)
+    if strategy == "merge_asof":
+        if len(specs) > 1:
+            raise ValueError("strategy='merge_asof' joins one feature table per call")
+        return _asof_merge(left, specs[0], on, left_ts)
     raise ValueError(f"unknown strategy {strategy!r}")
 
 
@@ -127,39 +219,31 @@ def asof_join(
 # overestimate only costs the (still-correct) union path, an
 # underestimate is caught by the count confirmation — never an OOM'd
 # broadcast.  0 disables auto-broadcast entirely (always union).
-_AUTO_BROADCAST_MAX_BYTES = int(
-    os.environ.get("TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES", str(64 * 1024 * 1024))
-)
+_AUTO_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
-def _auto_stats_small(right: DataFrame) -> bool:
-    """Free Catalyst plan-statistics gate: True when the optimizer
-    estimates ``right`` under the auto-broadcast byte threshold."""
-    try:
-        raw = right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j maps scala.BigInt to a Python int; keep a string fallback
-        est = raw if isinstance(raw, int) else int(str(raw))
-    except Exception:  # pragma: no cover - stats are best-effort
-        return False
-    return est <= _AUTO_BROADCAST_MAX_BYTES
-
-
-def _auto_broadcast_rows(right: DataFrame, salt_buckets: int) -> Optional[int]:
-    """Row count of ``right`` when the auto strategy should broadcast
-    it, else None (union).  Two-step decision: the free statistics gate,
-    then one cheap count of the (estimated-small) side to confirm — so
-    a huge feature table never pays a count just to be told to shuffle.
-    Note the residual risk: both gates can be fooled together when
-    Catalyst underestimates a <=5M-row frame of very wide rows (the
-    row guardrail bounds rows, not bytes) — set
-    TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES=0 to force union for such
-    workloads."""
+def _auto_broadcast_counts(specs: Sequence[dict], salt_buckets: int) -> Optional[List[int]]:
+    """Row counts of the feature sides when ``auto`` should broadcast
+    them all, else None (union).  Two steps: the free plan-statistics
+    check of EVERY table first, then one cheap count per table to
+    confirm — so a huge feature table never pays a count just to be
+    told to shuffle.  Residual risk: both steps can be fooled together
+    when Catalyst underestimates a <=5M-row frame of very wide rows (the
+    row guardrail bounds rows, not bytes); pass ``strategy="union"``
+    for such workloads."""
     if salt_buckets > 1 or _AUTO_BROADCAST_MAX_BYTES <= 0:
         return None
-    if not _auto_stats_small(right):
-        return None
-    n = right.count()
-    return n if n <= _BROADCAST_MAX_ROWS else None
+    for sp in specs:
+        try:
+            raw = sp["df"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            # py4j maps scala.BigInt to a Python int; keep a string fallback
+            est = raw if isinstance(raw, int) else int(str(raw))
+        except Exception:  # pragma: no cover - stats are best-effort
+            return None
+        if est > _AUTO_BROADCAST_MAX_BYTES:
+            return None
+    counts = [sp["df"].count() for sp in specs]
+    return counts if max(counts) <= _BROADCAST_MAX_ROWS else None
 
 
 # Probe rows per entity above which a key counts as hot and gets salted.
@@ -252,225 +336,71 @@ def _salt_feature(tagged: DataFrame, bucket: str, salt_buckets: int) -> DataFram
     ).drop("__hot")
 
 
-def _asof_union(
+def _asof_spine(
     left: DataFrame,
-    right: DataFrame,
+    specs: Sequence[dict],
     on: str,
     left_ts: str,
-    right_ts: str,
-    value_cols: List[str],
-    tolerance_sec: Optional[float],
     salt_buckets: int,
     salt_threshold: Optional[int],
-    keep_right_ts: bool,
 ) -> DataFrame:
-    """Union-tag + fill-forward: one shuffle, no UDF.
+    """Union-tag + fill-forward over one spine: one shuffle, no UDF.
 
-    Both sides are unioned on a common (entity, ts) spine with a side
-    tag; within each entity ordered by (ts, side) — feature rows sort
-    *before* probe rows at equal ts so exact matches are visible — a
-    ``last(value, ignorenulls=True)`` running window carries each
-    feature value forward onto probe rows.
+    The probe side and every feature side are unioned on a common
+    (entity, ts) spine with a side tag; within each entity ordered by
+    (ts, side) — feature rows sort *before* probe rows at equal ts so
+    exact matches are visible — one ``last(struct_k, ignorenulls=True)``
+    running window per table carries its latest feature row forward
+    onto the probe rows.
+
+    All of a table's payload rides ONE struct per feature row: matched
+    ts + every value column.  Filling the struct forward picks the
+    latest *feature row as a whole*, so a feature row whose value is SQL
+    NULL still wins (the probe sees NULL value + its matched ts) — exact
+    pandas merge_asof semantics.  Per-column ``last(ignorenulls)`` would
+    skip NULL values and pair a stale value with a newer matched ts.
     """
-    ts = "__ts"
-    side = "__side"  # 0 = feature (sorts first at ties), 1 = probe
-    l_cols = left.columns
-
-    salted = salt_buckets > 1
-    bucket = "__bucket"
-    l_sel = [F.col(c) for c in l_cols]
-    # All payload rides ONE struct per feature row: matched_ts + every
-    # value column.  Filling forward last(struct, ignorenulls=True)
-    # picks the latest *feature row as a whole*, so a feature row whose
-    # value is SQL NULL still wins (the probe sees NULL value + its
-    # matched_ts) — exact pandas merge_asof semantics.  Per-column
-    # last(ignorenulls) would skip NULL values and pair a stale value
-    # with a newer matched_ts.
     from pyspark.sql.types import StructField, StructType
 
-    fv_type = StructType(
-        [StructField("__mts", right.schema[right_ts].dataType)]
-        + [StructField(f"__v_{c}", right.schema[c].dataType) for c in value_cols]
-    )
-    lhs = left.select(
-        *l_sel,
-        F.col(left_ts).alias(ts),
-        F.lit(1).alias(side),
-        F.lit(None).cast(fv_type).alias("__fv"),
-    )
-    rhs = right.select(
-        *[
-            (F.col(on) if c == on else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in l_cols
-        ],
-        F.col(right_ts).alias(ts),
-        F.lit(0).alias(side),
-        F.struct(
-            F.col(right_ts).alias("__mts"),
-            *[F.col(c).alias(f"__v_{c}") for c in value_cols],
-        ).alias("__fv"),
-    )
-    hot_keys = (
-        _hot_keys(left, on, salt_threshold or DEFAULT_SALT_THRESHOLD) if salted else []
-    )
-    if salted and hot_keys:
-        tag = _hot_tagger(left.sparkSession, on, hot_keys)
-        lhs = _salt_probe(tag(lhs), ts, bucket, salt_buckets)
-        rhs = _salt_feature(tag(rhs), bucket, salt_buckets)
-        part = [on, bucket]
-    else:
-        part = [on]
-
-    u = lhs.unionByName(rhs)
-    w = Window.partitionBy(*part).orderBy(F.col(ts).asc(), F.col(side).asc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ff = F.last(F.col("__fv"), ignorenulls=True).over(w)
-    filled = u.select(
-        *l_cols,
-        F.col(ts),
-        F.col(side),
-        *[ff[f"__v_{c}"].alias(f"__f_{c}") for c in value_cols],
-        ff["__mts"].alias("__f_ts"),
-    )
-    out = filled.filter(F.col(side) == 1)
-    if tolerance_sec is not None:
-        in_tol = F.col("__f_ts").isNotNull() & (
-            _ts_sec(F.col(ts)) - _ts_sec(F.col("__f_ts")) <= F.lit(float(tolerance_sec))
-        )
-        out = out.select(
-            *l_cols,
-            *[F.when(in_tol, F.col(f"__f_{c}")).alias(c) for c in value_cols],
-            F.when(in_tol, F.col("__f_ts")).alias("__f_ts"),
-        )
-    else:
-        out = out.select(
-            *l_cols, *[F.col(f"__f_{c}").alias(c) for c in value_cols], F.col("__f_ts")
-        )
-    if keep_right_ts:
-        out = out.withColumnRenamed("__f_ts", f"matched_{right_ts}")
-    else:
-        out = out.drop("__f_ts")
-    return out
-
-
-def asof_join_multi(
-    left: DataFrame,
-    tables: Sequence[dict],
-    on: str,
-    left_ts: str = "ts",
-    salt_buckets: int = 1,
-    salt_threshold: Optional[int] = None,
-    strategy: str = "auto",
-) -> DataFrame:
-    """Fused backward as-of join of K feature tables onto one probe
-    spine in ONE union + ONE entity-partitioned window pass.
-
-    ``tables`` is a sequence of specs::
-
-        dict(name="purch", df=purchases, ts="feature_ts",
-             value_cols=None, tolerance_sec=None)
-
-    Per table the semantics are exactly ``asof_join(strategy='union')``:
-    latest right row with ``right_ts <= left_ts`` (exact ties match),
-    emitted as the table's value columns plus ``{name}_matched_ts``.
-
-    Why fused: the sequential loop shuffles the (wide, 10^12-row) probe
-    spine once PER TABLE — k tables, k Exchanges of the big side.  Here
-    every table's payload rides its own nullable struct column on one
-    shared union spine; the K ``last(struct_k, ignorenulls=True)``
-    window functions share a single window spec, so Catalyst evaluates
-    them in ONE Window operator over ONE Exchange + sort of the spine.
-    Per-table fill-forwards stay independent because rows of table j
-    carry NULL in table k's struct and ``ignorenulls`` skips them.
-
-    Skew: one shared hot-key pass over the probe side; hot probe rows
-    split into hash(ts) buckets, every table's hot feature rows
-    replicate into all buckets (cold keys pay nothing).
-
-    Strategy: ``"auto"`` (default) chains the zero-shuffle broadcast
-    kernel per table when EVERY feature side is provably small (the
-    ``asof_join`` auto gate) — k broadcast matches pipeline inside one
-    probe-scan stage, the probe spine never shuffles at all.  Otherwise
-    (or with ``strategy="union"`` / explicit ``salt_buckets``) the
-    fused one-union-one-window pass above.  Results are identical
-    either way: each table's fill-forward is independent, so k chained
-    broadcast matches compute exactly the k fused window columns."""
-    from pyspark.sql.types import StructField, StructType
-
-    specs = [dict(t) for t in tables]
-    if not specs:
-        return left
     ts = "__ts"
     side = "__side"  # 0 = feature (sorts first at ties), 1 = probe
     bucket = "__bucket"
     l_cols = left.columns
-    out_names: List[str] = list(l_cols)
-    for k, sp in enumerate(specs):
-        right, rts = sp["df"], sp["ts"]
-        sp["value_cols"] = list(
-            sp.get("value_cols")
-            or [c for c in right.columns if c not in (on, rts)]
+    fv_type = [
+        StructType(
+            [StructField("__mts", sp["df"].schema[sp["ts"]].dataType)]
+            + [StructField(f"__v_{c}", sp["df"].schema[c].dataType) for c in sp["value_cols"]]
         )
-        sp["matched"] = f"{sp['name']}_matched_ts"
-        for c in sp["value_cols"] + [sp["matched"]]:
-            if c in out_names:
-                raise ValueError(
-                    f"asof_join_multi: output column {c!r} of table "
-                    f"{sp['name']!r} collides with an earlier column; "
-                    "pass value_cols / rename to disambiguate"
-                )
-            out_names.append(c)
-        sp["fv"] = f"__fv{k}"
-        sp["fv_type"] = StructType(
-            [StructField("__mts", right.schema[rts].dataType)]
-            + [StructField(f"__v_{c}", right.schema[c].dataType) for c in sp["value_cols"]]
+        for sp in specs
+    ]
+
+    def on_spine(df: DataFrame, cols: List[Column], t: str, tag: int, k: int) -> DataFrame:
+        # the probe (k=-1) or table k on the shared spine schema: only
+        # table k's struct is set, every other table's is NULL
+        return df.select(
+            *cols,
+            F.col(t).alias(ts),
+            F.lit(tag).alias(side),
+            *[
+                (
+                    F.struct(
+                        F.col(t).alias("__mts"),
+                        *[F.col(c).alias(f"__v_{c}") for c in specs[j]["value_cols"]],
+                    )
+                    if j == k
+                    else F.lit(None).cast(fv_type[j])
+                ).alias(f"__fv{j}")
+                for j in range(len(specs))
+            ],
         )
 
-    if strategy == "auto":
-        # all k FREE stats gates first — one oversized table decides
-        # union without any count job having been paid (review r8)
-        if (
-            salt_buckets <= 1
-            and _AUTO_BROADCAST_MAX_BYTES > 0
-            and all(_auto_stats_small(sp["df"]) for sp in specs)
-        ):
-            counts = [sp["df"].count() for sp in specs]
-            if all(n <= _BROADCAST_MAX_ROWS for n in counts):
-                return _asof_broadcast_multi(left, specs, on, left_ts, counts)
-    elif strategy != "union":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    lhs = left.select(
-        *[F.col(c) for c in l_cols],
-        F.col(left_ts).alias(ts),
-        F.lit(1).alias(side),
-        *[F.lit(None).cast(sp["fv_type"]).alias(sp["fv"]) for sp in specs],
-    )
-    sides = [lhs]
-    for k, sp in enumerate(specs):
-        right, rts = sp["df"], sp["ts"]
-        sides.append(
-            right.select(
-                *[
-                    (F.col(on) if c == on else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-                    for c in l_cols
-                ],
-                F.col(rts).alias(ts),
-                F.lit(0).alias(side),
-                *[
-                    (
-                        F.struct(
-                            F.col(rts).alias("__mts"),
-                            *[F.col(c).alias(f"__v_{c}") for c in sp["value_cols"]],
-                        )
-                        if j == k
-                        else F.lit(None).cast(specs[j]["fv_type"])
-                    ).alias(specs[j]["fv"])
-                    for j in range(len(specs))
-                ],
-            )
-        )
+    null_probe_cols = [
+        (F.col(on) if c == on else F.lit(None).cast(left.schema[c].dataType)).alias(c)
+        for c in l_cols
+    ]
+    sides = [on_spine(left, [F.col(c) for c in l_cols], left_ts, 1, -1)] + [
+        on_spine(sp["df"], null_probe_cols, sp["ts"], 0, k) for k, sp in enumerate(specs)
+    ]
 
     salted = salt_buckets > 1
     hot_keys = (
@@ -492,8 +422,8 @@ def asof_join_multi(
         Window.unboundedPreceding, 0
     )
     proj: List[Column] = [F.col(c) for c in l_cols]
-    for sp in specs:
-        ff = F.last(F.col(sp["fv"]), ignorenulls=True).over(w)
+    for k, sp in enumerate(specs):
+        ff = F.last(F.col(f"__fv{k}"), ignorenulls=True).over(w)
         tol = sp.get("tolerance_sec")
         if tol is not None:
             in_tol = ff["__mts"].isNotNull() & (
@@ -507,60 +437,44 @@ def asof_join_multi(
     return u.select(*proj, F.col(side)).filter(F.col(side) == 1).drop(side)
 
 
-def _asof_merge(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: List[str],
-    tolerance_sec: Optional[float],
-    keep_right_ts: bool,
-) -> DataFrame:
-    """Co-partition by entity + per-partition ``pandas.merge_asof``
-    (Arrow-batched, vectorized — no per-row Python).
+def _asof_merge(left: DataFrame, sp: dict, on: str, left_ts: str) -> DataFrame:
+    """Co-partition by entity + per-group ``pandas.merge_asof``
+    (Arrow-batched, vectorized — no per-row Python); one table only.
 
-    Partition-boundary-correct because partitioning is on the entity
-    key only (never on time), so an entity's full feature history is
+    Partition-boundary-correct because grouping is on the entity key
+    only (never on time), so an entity's full feature history is
     visible to its probe rows.
     """
+    right, rts, value_cols, matched = sp["df"], sp["ts"], sp["value_cols"], sp["matched"]
+    tol = sp.get("tolerance_sec")
     l_cols = left.columns
-    rv = right.select(
-        F.col(on), F.col(right_ts), *[F.col(c) for c in value_cols]
-    ).withColumnRenamed(right_ts, "__rts")
-    lt = left.withColumn("__side", F.lit(1))
-    rt = rv.withColumn("__side", F.lit(0))
-    # single cogroup-style shuffle: tag and union, group by entity
+    out_cols = l_cols + value_cols + [matched]
+    rv = right.select(F.col(on), F.col(rts).alias("__rts"), *[F.col(c) for c in value_cols])
     merged_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields]
         + [f"`{c}` {right.schema[c].dataType.simpleString()}" for c in value_cols]
-        + [f"`matched_{right_ts}` {right.schema[right_ts].dataType.simpleString()}"]
+        + [f"`{matched}` {right.schema[rts].dataType.simpleString()}"]
     )
 
     def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if lpdf.empty:
-            return pd.DataFrame(columns=l_cols + value_cols + [f"matched_{right_ts}"])
-        lpdf = lpdf.sort_values(left_ts, kind="stable")
-        rpdf = rpdf.sort_values("__rts", kind="stable")[["__rts"] + value_cols]
+            return pd.DataFrame(columns=out_cols)
+        # merge_asof rejects NULL keys; a NaT probe row has no point in
+        # time, so it skips the merge and comes back unmatched
+        has_ts = lpdf[left_ts].notna()
         out = pd.merge_asof(
-            lpdf,
-            rpdf,
+            lpdf[has_ts].sort_values(left_ts, kind="stable"),
+            rpdf.sort_values("__rts", kind="stable")[["__rts"] + value_cols],
             left_on=left_ts,
             right_on="__rts",
             direction="backward",
-            tolerance=pd.Timedelta(seconds=tolerance_sec) if tolerance_sec is not None else None,
+            tolerance=pd.Timedelta(seconds=tol) if tol is not None else None,
         )
-        out = out.rename(columns={"__rts": f"matched_{right_ts}"})
-        return out[l_cols + value_cols + [f"matched_{right_ts}"]]
+        if not has_ts.all():
+            out = pd.concat([out, lpdf[~has_ts]], ignore_index=True)
+        return out.rename(columns={"__rts": matched})[out_cols]
 
-    out = (
-        lt.groupBy(on)
-        .cogroup(rt.groupBy(on))
-        .applyInPandas(lambda lp, rp: merge(lp, rp), merged_schema)
-    )
-    if not keep_right_ts:
-        out = out.drop(f"matched_{right_ts}")
-    return out
+    return left.groupBy(on).cogroup(rv.groupBy(on)).applyInPandas(merge, merged_schema)
 
 
 # Broadcast guardrail: each feature row costs ~8B (ts) + 8-ish B per
@@ -570,15 +484,12 @@ def _asof_merge(
 _BROADCAST_MAX_ROWS = 5_000_000
 
 
-# "no match" marker for the broadcast kernels' matched-ts column:
-# INT64_MIN micros (~year -290308) cannot collide with any real
-# timestamp the engine can represent, unlike -1 (1 µs before epoch)
-_TS_UNMATCHED = -(2**63)
-
-
 def _bcast_build(right: DataFrame, on: str, right_ts: str, value_cols: List[str]) -> dict:
     """Flat broadcastable (entity-code, ts, values) arrays sorted by
-    (code, ts): each entity's history is one contiguous block."""
+    (code, ts): each entity's history is one contiguous block.  ``right``
+    must hold no NULL key or ts (``_asof`` drops them): pandas
+    sorts NaN last and factorizes it to code -1, which would break the
+    sorted-key invariant ``searchsorted`` relies on."""
     import numpy as np
 
     pdf = (
@@ -587,12 +498,6 @@ def _bcast_build(right: DataFrame, on: str, right_ts: str, value_cols: List[str]
             F.unix_micros(F.col(right_ts).cast("timestamp")).alias("__t"),
             *[F.col(c) for c in value_cols],
         )
-        # A NULL feature ts has no point-in-time meaning; keeping it
-        # would also corrupt the kernel (pandas sorts NaN last, then
-        # int64 conversion turns it into INT64_MIN, breaking the
-        # sorted-key invariant searchsorted relies on) — drop it here,
-        # matching the probe-side non-null precondition.
-        .filter(F.col(right_ts).isNotNull())
         .toPandas()
         .sort_values(["__e", "__t"], kind="stable")
         .reset_index(drop=True)
@@ -630,10 +535,9 @@ def _bcast_match_idx(tb: dict, entity: pd.Series, ts_us: pd.Series, tol_us):
     probe t -> global t rank via one ``searchsorted``, then ONE
     ``searchsorted`` of the composed (code, rank) keys against the
     table's precomputed strictly-increasing key array (``_bcast_build``)
-    — no per-code loop, no pandas groupby, no per-row Python (the
-    previous per-distinct-code loop was ~20k Python iterations per
-    batch on a 20k-entity table and dominated the kernel).  Returns
-    int64 row indices into the broadcast arrays, -1 where unmatched."""
+    — no per-code loop, no pandas groupby, no per-row Python.  Returns
+    int64 row indices into the broadcast arrays, -1 where unmatched
+    (unknown or NULL entity, NULL probe ts, nothing at or before ts)."""
     import numpy as np
 
     b_codes, b_t = tb["codes"], tb["t"]
@@ -646,12 +550,15 @@ def _bcast_match_idx(tb: dict, entity: pd.Series, ts_us: pd.Series, tol_us):
     # unknown entity -> code -1: its composed key is < every table key
     # (ub <= N so -1*(N+1) + ub - 1 < 0), landing at p = -1 -> unmatched
     kc = np.where(np.isnan(codes), -1, codes).astype(np.int64)
-    kt = ts_us.to_numpy(np.int64)
+    # a NULL probe ts arrives as NaN: zero it for the int64 cast and
+    # mask the row below
+    ts_null = ts_us.isna().to_numpy()
+    kt = ts_us.to_numpy(np.int64, na_value=0)
     n = np.int64(len(b_t) + 1)
     ub = np.searchsorted(tb["t_sorted"], kt, side="right")
     p = np.searchsorted(tb["keys"], kc * n + ub - 1, side="right") - 1
     gather = np.maximum(p, 0)
-    valid = (p >= 0) & (b_codes[gather] == kc)
+    valid = (p >= 0) & (b_codes[gather] == kc) & ~ts_null
     if tol_us is not None:
         valid &= kt - b_t[gather] <= tol_us
     return np.where(valid, p, -1)
@@ -661,51 +568,49 @@ def _bcast_match_cols(
     tb: dict, entity: pd.Series, ts_us: pd.Series, tol_us, value_cols: List[str],
     matched_field: str,
 ) -> dict:
-    """Column dict (values + matched-us) for one broadcast table."""
+    """Column dict (values + matched-us) for one broadcast table;
+    unmatched rows are NULL in every column."""
     import numpy as np
 
     out_idx = _bcast_match_idx(tb, entity, ts_us, tol_us)
-    hit = out_idx >= 0
+    if len(tb["t"]) == 0:  # nothing to gather from: every row unmatched
+        none = pd.Series([None] * len(entity), dtype=object)
+        return {c: none for c in value_cols + [matched_field]}
+    miss = out_idx < 0
     gather = np.maximum(out_idx, 0)
-    b_t, b_vals = tb["t"], tb["vals"]
-    n_rows = len(entity)
     data = {}
     for c in value_cols:
-        if len(b_t) == 0:
-            col = pd.Series([None] * n_rows, dtype=object)
-        else:
-            # object dtype so unmatched rows (and NaN feature values)
-            # cross Arrow as SQL NULL, not float NaN
-            col = pd.Series(b_vals[c][gather].astype(object))
-            col[~hit] = None
+        # object dtype so unmatched rows (and NaN feature values)
+        # cross Arrow as SQL NULL, not float NaN
+        col = pd.Series(tb["vals"][c][gather].astype(object))
+        col[miss] = None
         data[c] = col
-    # unmatched sentinel = INT64_MIN, NOT -1: -1 is a legitimate
-    # pre-epoch timestamp_micros and would blank matched_ts while the
-    # value columns are filled (review r8)
-    out_ts = (
-        np.full(n_rows, _TS_UNMATCHED, dtype=np.int64)
-        if len(b_t) == 0
-        else np.where(hit, b_t[gather], _TS_UNMATCHED)
-    )
-    data[matched_field] = pd.Series(out_ts)
+    # masked int64: crosses Arrow with a validity bitmap, no sentinel
+    data[matched_field] = pd.Series(pd.arrays.IntegerArray(tb["t"][gather], miss))
     return data
 
 
 def _asof_broadcast_multi(
     left: DataFrame, specs: Sequence[dict], on: str, left_ts: str, counts: Sequence[int]
 ) -> DataFrame:
-    """Fused k-table broadcast as-of: ONE Arrow crossing matches every
-    table (vs k chained pandas-UDF stages — k-fold fewer JVM<->Python
-    transfers of the probe's (entity, ts) columns; guide §4.1).  The
-    probe side is never shuffled.  Output columns/types are identical
-    to the union-fused pass: l_cols, then per table value_cols +
-    ``{name}_matched_ts``."""
+    """Broadcast as-of of k tables: when the feature sides fit in
+    executor memory (the common feature-store shape — features per
+    entity are small even when the probe table is 10^12 rows), ship each
+    as flat sorted arrays (``_bcast_build``) to every task and match
+    them all in ONE Arrow crossing (vs k chained pandas-UDF stages —
+    k-fold fewer JVM<->Python transfers of the probe's (entity, ts)
+    columns; guide §4.1), fully vectorized per batch
+    (``_bcast_match_idx``).  ZERO shuffle of the (wide) probe side — the
+    same reasoning as broadcasting the small side of an equi-join.
+    Output columns/types are identical to the union spine's: l_cols,
+    then per table value_cols + its matched column."""
     spark = left.sparkSession
     tables = []
     for sp, n in zip(specs, counts):
-        if n > _BROADCAST_MAX_ROWS:  # caller gates; keep the guardrail
+        if n > _BROADCAST_MAX_ROWS:
             raise ValueError(
-                f"feature side {sp['name']!r} has {n} rows; too large to broadcast"
+                f"feature side {sp['name']!r} has {n} rows; too large to broadcast "
+                "— use strategy='union'"
             )
         tables.append(_bcast_build(sp["df"], on, sp["ts"], sp["value_cols"]))
     bc = spark.sparkContext.broadcast(tables)
@@ -715,11 +620,13 @@ def _asof_broadcast_multi(
     ]
     all_vcols = [list(sp["value_cols"]) for sp in specs]
     fields = ", ".join(
-        f"`{c}` {sp['df'].schema[c].dataType.simpleString()}"
-        for sp in specs
-        for c in sp["value_cols"]
+        [
+            f"`{c}` {sp['df'].schema[c].dataType.simpleString()}"
+            for sp in specs
+            for c in sp["value_cols"]
+        ]
+        + [f"`__matched_us_{k}` bigint" for k in range(len(specs))]
     )
-    fields += ", " + ", ".join(f"`__matched_us_{k}` bigint" for k in range(len(specs)))
 
     @F.pandas_udf(fields)
     def _match_all(entity: pd.Series, ts_us: pd.Series) -> pd.DataFrame:
@@ -740,70 +647,10 @@ def _asof_broadcast_multi(
     for k, sp in enumerate(specs):
         sel += [F.col(f"__m.{c}").alias(c) for c in sp["value_cols"]]
         sel.append(
-            F.when(
-                F.col(f"__m.__matched_us_{k}") != F.lit(_TS_UNMATCHED),
-                F.timestamp_micros(F.col(f"__m.__matched_us_{k}")).cast(
-                    sp["df"].schema[sp["ts"]].dataType
-                ),
-            ).alias(sp["matched"])
+            F.timestamp_micros(F.col(f"__m.__matched_us_{k}"))
+            .cast(sp["df"].schema[sp["ts"]].dataType)
+            .alias(sp["matched"])
         )
-    return out.select(*sel)
-
-
-def _asof_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: List[str],
-    tolerance_sec: Optional[float],
-    keep_right_ts: bool,
-    precounted: Optional[int] = None,
-) -> DataFrame:
-    """Broadcast as-of: when the feature side fits in executor memory
-    (the common feature-store shape — features per entity are small even
-    when the probe table is 10^12 rows), ship flat (entity-code, ts,
-    values) arrays sorted by (code, ts) to every task and match fully
-    vectorized per Arrow batch: entity -> code via one C-level hash-map
-    lookup, block bounds via two ``searchsorted`` calls over the sorted
-    code array, then one ``searchsorted`` per distinct code in the batch
-    (numpy slices only — no pandas groupby, no per-row Python).  ZERO
-    shuffle of the (wide) probe side — the same reasoning as
-    broadcasting the small side of an equi-join.
-    """
-    spark = left.sparkSession
-    n = precounted if precounted is not None else right.count()
-    if n > _BROADCAST_MAX_ROWS:
-        raise ValueError(
-            f"feature side has {n} rows; too large to broadcast — use strategy='union'"
-        )
-    table = _bcast_build(right, on, right_ts, value_cols)
-    bc = spark.sparkContext.broadcast(table)
-    tol_us = None if tolerance_sec is None else int(tolerance_sec * 1_000_000)
-
-    fields = ", ".join(
-        [f"`{c}` {right.schema[c].dataType.simpleString()}" for c in value_cols]
-        + ["`__matched_us` bigint"]
-    )
-
-    @F.pandas_udf(fields)
-    def _match(entity: pd.Series, ts_us: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            _bcast_match_cols(bc.value, entity, ts_us, tol_us, value_cols, "__matched_us")
-        )
-
-    l_cols = left.columns
-    out = left.withColumn(
-        "__m", _match(F.col(on), F.unix_micros(F.col(left_ts).cast("timestamp")))
-    )
-    matched_ts = F.when(
-        F.col("__m.__matched_us") != F.lit(_TS_UNMATCHED),
-        F.timestamp_micros(F.col("__m.__matched_us")).cast(right.schema[right_ts].dataType),
-    )
-    sel = [F.col(c) for c in l_cols] + [F.col(f"__m.{c}").alias(c) for c in value_cols]
-    if keep_right_ts:
-        sel.append(matched_ts.alias(f"matched_{right_ts}"))
     return out.select(*sel)
 
 
